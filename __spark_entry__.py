@@ -1733,8 +1733,8 @@ def q_skew_distinct(spark, sf_dir):
     The md5 checkable engine makes every register, rank and both
     estimates bit-replayable in DuckDB (the xxhash64 scale engine is
     the same plan, different hash — pytest asserts its accuracy and
-    merge law). n = occupied registers / k_used; v = estimate
-    rounded 4 (exact-integer harmonic sums, so the one double
+    merge law). n = occupied registers / k_used; v = the estimate
+    (exact-integer harmonic sums, so the one double
     division matches cross-engine; estimates emitted UNROUNDED — same
     route ⇒ bit-equal doubles, and round() is where engines diverge).
 

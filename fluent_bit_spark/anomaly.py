@@ -286,6 +286,8 @@ def ewma_drift_stream(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+    from .sessions import ordered_rows
+
     a = float(alpha)
     key_ddl = events.schema[key].dataType.simpleString()
     out_schema = (
@@ -326,17 +328,11 @@ def ewma_drift_stream(
                 s = (1.0 - a) * s + a * pane_mean * pane_mean
             i += 1
 
-        # one global sort across every Arrow chunk of this batch:
-        # applyInPandasWithState delivers a group as ~10k-row chunks in
-        # arbitrary shuffle order, and a per-chunk sort would close
-        # panes prematurely
-        pairs = []
-        for pdf in pdfs:
-            sub = pdf[["__us", "__v"]].dropna()
-            pairs.extend(
-                zip(sub["__us"].astype("int64"), sub["__v"].astype("float64"))
-            )
-        for u, v in sorted(pairs):
+        # one global sort across every Arrow chunk of this batch: a
+        # per-chunk sort would close panes prematurely
+        rows_in = ordered_rows(pdfs, ["__us", "__v"])
+        for u, v in zip(rows_in["__us"].astype("int64"),
+                        rows_in["__v"].astype("float64")):
             pane = int(u) // pane_us
             if cn == 0:
                 open_pane = pane

@@ -8,8 +8,8 @@ This is the Spark re-expression of the reference's engine lifecycle
     parser (flb_parser_do)-> narrow column expressions (same stage)
     filters (flb_filter_do)-> narrow when/otherwise exprs (same stage)
     stream processor      -> groupBy/window aggregation (shuffle stage)
-    router + outputs      -> N filtered writes off ONE persisted frame,
-                             per-sink counts via observe()
+    router + outputs      -> router.write_sinks: N filtered writes off ONE
+                             persisted frame, per-sink counts via observe()
     retries/backpressure  -> Spark task retry + atomic _SUCCESS commits
 
 Scale design (the north rule's explicit asks):
@@ -22,9 +22,16 @@ Scale design (the north rule's explicit asks):
   --stream), where the same stages run per micro-batch and the persist
   is bounded to one trigger's files. Throughput is identical
   (BENCH.md "Streaming vs batch": ±1% at 2M docs, counts equal).
-* lineage: every run appends a manifest JSON (run id, input snapshot,
-  per-sink row counts, durations) under <out>/_lineage/, the analogue of
-  in_tail's SQLite offset db (plugins/in_tail/tail_sql.h:30-44).
+* one writer: batch (this module) and streaming
+  (`streaming.run_pipeline_stream`) both fan out through
+  `router.write_sinks`, so every sink format and output processor
+  behaves the same in either mode.
+* lineage: every run appends a manifest JSON (run id, input and parsed
+  rows, per-sink row counts, durations) under <out>/_lineage/, the
+  analogue of in_tail's SQLite offset db (plugins/in_tail/tail_sql.h:30-44).
+  Every count comes from an observe() on the frames the run already
+  computes — the input scan, the persisted routed frame, each sink write
+  — so no count() re-scans the input.
 * resume: a re-run with the same run_id skips sinks that already carry a
   _SUCCESS marker and matching manifest counts (effectively-once per sink
   — stronger than the reference's at-least-once retry,
@@ -44,7 +51,7 @@ from pyspark.sql import functions as F
 
 from .enrich import dict_enrich, geoip_enrich, literal_map_enrich
 from .parsers import APACHE
-from .router import RouteCondition, RewriteTagRule, SinkSpec, apply_rewrite_tag, route_flags
+from .router import RouteCondition, RewriteTagRule, SinkSpec, apply_rewrite_tag, write_sinks
 from .webgen import geo_dict, lang_dict
 
 DEFAULT_SINKS = (
@@ -241,7 +248,6 @@ def run_pipeline(
     run_id: str = "run1",
     sinks: Sequence[SinkSpec] = DEFAULT_SINKS,
     resume: bool = True,
-    coalesce_output: Optional[int] = None,
     engine: str = "jvm",
 ) -> PipelineResult:
     """engine — 'jvm'/'pandas' parse the source ``text`` column;
@@ -253,14 +259,18 @@ def run_pipeline(
     geo = geo_dict(spark)
     langs = lang_dict(spark)
 
+    input_obs, parsed_obs = Observation(), Observation()
+    n = F.count(F.lit(1)).alias("n")
     if engine == "fused":
         src = pages.drop("text") if "text" in pages.columns else pages
-        stage_out = extract_parse_stage(src)
+        stage_out = extract_parse_stage(src.observe(input_obs, n))
     else:
-        stage_out = parse_stage(pages, engine=engine)
+        stage_out = parse_stage(pages.observe(input_obs, n), engine=engine)
     parsed = tag_stage(enrich_stage(filter_stage(stage_out), geo, langs))
-
-    flagged = route_flags(parsed, sinks).persist()
+    # persisted once: write_sinks reads this cache instead of persisting
+    # its own, and the metrics leg reads it too. Both observations sit
+    # inside the cached plan and report on the first action that builds it
+    routed = parsed.observe(parsed_obs, n).persist()
     try:
         manifest_dir = os.path.join(out_dir, "_lineage")
         os.makedirs(manifest_dir, exist_ok=True)
@@ -270,47 +280,27 @@ def run_pipeline(
             with open(manifest_path) as fh:
                 prior = json.load(fh).get("sinks", {})
 
-        sink_counts: dict = {}
-        resumed: list = []
-        route_cols = [f"__route_{s.name}" for s in sinks]
-        for s in sinks:
-            dest = os.path.join(out_dir, s.name)
-            if (
-                resume
-                and s.name in prior
-                and os.path.exists(os.path.join(dest, "_SUCCESS"))
-            ):
-                sink_counts[s.name] = prior[s.name]["rows"]
-                resumed.append(s.name)
-                continue
-            # backticks: dot-carrying sink names must not parse as
-            # nested paths (same fix as router.write_sinks)
-            part = flagged.filter(
-                F.col(f"`__route_{s.name}`")
-            ).drop(*route_cols)
-            obs = Observation(f"sink_{s.name}_{run_id}")
-            part = part.observe(obs, F.count(F.lit(1)).alias("n"))
-            if coalesce_output:
-                part = part.coalesce(coalesce_output)
-            writer = part.write.mode("overwrite")
-            if s.fmt == "json":
-                writer.json(dest)
-            elif s.fmt == "csv":
-                writer.option("header", True).csv(dest)
-            else:
-                writer.parquet(dest)
-            sink_counts[s.name] = obs.get["n"]
+        resumed = [
+            s.name for s in sinks
+            if resume and s.name in prior
+            and os.path.exists(os.path.join(out_dir, s.name, "_SUCCESS"))
+        ]
+        written = write_sinks(
+            routed, [s for s in sinks if s.name not in resumed], out_dir,
+            mode="overwrite",
+        )
+        sink_counts = {
+            s.name: prior[s.name]["rows"] if s.name in resumed else written[s.name]
+            for s in sinks
+        }
 
         # metrics leg (shuffle) runs off the same persisted frame
-        metrics = metrics_query(flagged)
+        metrics = metrics_query(routed)
         metrics_dest = os.path.join(out_dir, "_metrics", run_id)
         metrics.coalesce(1).write.mode("overwrite").parquet(metrics_dest)
 
-        input_rows = pages.count()
-        parsed_rows = sum(
-            r["n"]
-            for r in flagged.groupBy().agg(F.count(F.lit(1)).alias("n")).collect()
-        )
+        input_rows = input_obs.get["n"]
+        parsed_rows = parsed_obs.get["n"]
         duration = time.time() - t0
 
         manifest = {
@@ -338,4 +328,4 @@ def run_pipeline(
             manifest_path=manifest_path,
         )
     finally:
-        flagged.unpersist()
+        routed.unpersist()

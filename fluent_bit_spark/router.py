@@ -30,7 +30,7 @@ import re
 from dataclasses import dataclass, field
 from typing import Callable, Optional, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .jsonesc import fb_json_body
@@ -380,12 +380,54 @@ def route_flags(df: DataFrame, sinks: Sequence[SinkSpec], tag_col: str = "tag") 
     return out
 
 
+# the column write_sinks routes on; its renderers frame records by it
+_TAG_COL = "tag"
+# record-time column a renderer falls back to when SinkSpec.ts_col is unset
+_TS_COLS = ("ts", "warc_ts", "time")
+
+# formats whose writers name their own part files and clear the sink dir
+# on every call (msgpackfmt._write_binary_values): they cannot append
+SELF_NAMED_FMTS = ("msgpack", "forward", "td")
+
+# request-body staging tables with one call shape,
+# fn(part, tag_col=, ts_col=, **format_options), one body per (tag, chunk)
+_PAYLOAD_FMTS = {
+    "slack": ("vendorfmt", "slack_payloads"),
+    "nats": ("vendorfmt", "nats_payloads"),
+    "logdna": ("vendorfmt", "logdna_payloads"),
+    "nrlogs": ("vendorfmt", "nrlogs_payloads"),
+    "azure": ("vendorfmt", "azure_payloads"),
+    "skywalking": ("vendorfmt", "skywalking_payloads"),
+    "kafka_rest": ("vendorfmt", "kafka_rest_payloads"),
+    "vivo": ("vendorfmt", "vivo_payloads"),
+    # out_stackdriver entries:write bodies
+    "stackdriver": ("stackdriverfmt", "stackdriver_payloads"),
+    # out_datadog JSON-array request bodies
+    "datadog": ("datadogfmt", "datadog_payloads"),
+}
+
+_LINE_FMTS = (
+    "ltsv", "plain", "template", "gelf", "out_file", "es_bulk",
+    "splunk_hec", "loki", "json", "syslog",
+)
+
+
+def check_appendable(sinks: Sequence[SinkSpec]) -> None:
+    """Reject sinks that would replace, not extend, their output when
+    written again into the same directory."""
+    bad = [s.name for s in sinks if s.fmt in SELF_NAMED_FMTS]
+    if bad:
+        raise ValueError(
+            f"sinks {bad}: formats {SELF_NAMED_FMTS} name their own files "
+            "and cannot be appended to"
+        )
+
+
 def write_sinks(
     df: DataFrame,
     sinks: Sequence[SinkSpec],
     base_path: str,
-    tag_col: str = "tag",
-    count_mode: str = "observe",
+    mode: str = "overwrite",
 ) -> dict[str, int]:
     """Fan out one filtered write per sink from a single persisted upstream.
 
@@ -394,9 +436,17 @@ def write_sinks(
     enriched DataFrame is persisted once, then each sink runs a filtered
     write; per-sink record counts (the out_counter sink,
     plugins/out_counter/counter.c:57-79) come from ``observe()`` metrics on
-    the same pass — no second scan per sink.
+    the same pass — no second scan per sink. A ``df`` the caller already
+    persisted is read as is (pipeline.run_pipeline shares its cache with
+    the metrics leg). ``mode`` is the save mode: 'overwrite' for a batch
+    run, 'append' for streaming micro-batches (SELF_NAMED_FMTS excluded).
     """
-    flagged = route_flags(df, sinks, tag_col).persist()
+    if mode == "append":
+        check_appendable(sinks)
+    flagged = route_flags(df, sinks)
+    owned = not df.is_cached
+    if owned:
+        flagged = flagged.persist()
     counts: dict[str, int] = {}
     try:
         for s in sinks:
@@ -412,440 +462,258 @@ def write_sinks(
             # sink actually renders, counter.c:57-79)
             for proc in s.processors or ():
                 part = proc(part)
-            obs_name = f"sink_{s.name}"
-            from pyspark.sql import Observation
-
-            obs = Observation(obs_name)
+            obs = Observation(f"sink_{s.name}")
             part = part.observe(obs, F.count(F.lit(1)).alias("n"))
             dest = f"{base_path}/{s.name}"
-            if s.fmt in (
-                "ltsv", "plain", "template", "gelf", "out_file",
-                "es_bulk", "splunk_hec", "loki",
-            ):
-                # the observe node upstream of this projection still fires
-                if s.fmt == "out_file":
-                    ts_col = s.ts_col or next(
-                        (c for c in part.columns if c in ("ts", "warc_ts", "time")),
-                        None,
-                    )
-                    line = out_file_line(part, ts_col, tag_col)
-                elif s.fmt in ("es_bulk", "splunk_hec", "loki"):
-                    ts_col = s.ts_col or next(
-                        (c for c in part.columns if c in ("ts", "warc_ts", "time")),
-                        None,
-                    )
-                    if s.fmt == "es_bulk":
-                        line = es_bulk_lines(
-                            part, ts_col, **(s.es_options or s.format_options or {})
-                        )
-                    elif s.fmt == "splunk_hec":
-                        line = splunk_hec_lines(
-                            part, ts_col, **(s.format_options or {})
-                        )
-                    else:
-                        line = loki_lines(part, ts_col, **(s.format_options or {}))
-                elif s.fmt == "gelf":
-                    from .gelffmt import gelf_line
-
-                    ts_col = s.ts_col or next(
-                        (c for c in part.columns if c in ("ts", "warc_ts", "time")),
-                        None,
-                    )
-                    line = gelf_line(
-                        part, ts_col=ts_col, **(s.gelf_fields or {})
-                    )
-                else:
-                    line = _text_line(part, s)
-                part = part.select(line.alias("value"))
-                part.write.mode("overwrite").text(dest)
-                counts[s.name] = obs.get["n"]
-                continue
-            if s.fmt == "msgpack":
-                from .msgpackfmt import write_msgpack
-
-                ts_col = s.ts_col or next(
-                    (c for c in part.columns if c in ("ts", "warc_ts", "time")),
-                    None,
-                )
-                cols = [c for c in part.columns if c != ts_col]
-                write_msgpack(part, ts_col, cols, dest)
-                counts[s.name] = obs.get["n"]
-                continue
-            if s.fmt == "prom":
-                # exposition text (metrics.prom_lines): banner-before-
-                # samples ordering must survive the file write, and an
-                # exposition page is one scrape document by definition —
-                # a single sorted partition, like the reference's one
-                # text buffer per scrape (hash_format_metrics)
-                from .metrics import prom_lines
-
-                page = prom_lines(part, **(s.format_options or {}))
-                page = (
-                    page.repartition(1)
-                    .sortWithinPartitions("metric_name", "ord", "line")
-                    .select(F.col("line").alias("value"))
-                )
-                page.write.mode("overwrite").text(dest)
-                counts[s.name] = obs.get["n"]
-                continue
-            if s.fmt in ("kinesis", "firehose"):
-                # PutRecords / PutRecordBatch request bodies, one JSON
-                # body per line (Data is base64 so bodies are
-                # single-line by construction)
-                from .kinesisfmt import (
-                    firehose_data,
-                    firehose_put_record_batch,
-                    kinesis_data,
-                    kinesis_put_records,
-                )
-
-                opts = dict(s.format_options or {})
-                stream = opts.pop("stream")
-                ts_col = s.ts_col or next(
-                    (c for c in part.columns if c in ("ts", "warc_ts", "time")),
-                    None,
-                )
-                common = dict(
-                    tag_col=tag_col, ts_col=ts_col,
-                    time_key=opts.pop("time_key", None),
-                    time_key_format=opts.pop("time_key_format", None),
-                    log_key=opts.pop("log_key", None),
-                )
-                if s.fmt == "kinesis":
-                    bodies = kinesis_put_records(
-                        kinesis_data(part, **common), stream,
-                        uuid=opts.pop("uuid", None))
-                else:
-                    bodies = firehose_put_record_batch(
-                        firehose_data(
-                            part, compression=opts.pop("compression", None),
-                            **common),
-                        stream)
-                bodies.select(F.col("body").alias("value")) \
-                    .write.mode("overwrite").text(dest)
-                counts[s.name] = obs.get["n"]
-                continue
-            if s.fmt == "promrw":
-                # out_prometheus_remote_write payload staging: one
-                # snappy/gzip WriteRequest body per (sink, chunk),
-                # written as parquet rows (tag, n_series, n_samples,
-                # body) for the poster
-                from .promrw import remote_write_payloads
-
-                opts = dict(s.format_options or {})
-                ts_col = opts.pop("ts_col", None) or s.ts_col
-                ts_ms = None
-                if ts_col and ts_col in part.columns:
-                    if dict(part.dtypes)[ts_col] in ("bigint", "int"):
-                        ts_ms = ts_col
-                    else:
-                        part = part.withColumn(
-                            "__ts_ms",
-                            F.unix_millis(F.col(ts_col).cast("timestamp")),
-                        )
-                        ts_ms = "__ts_ms"
-                remote_write_payloads(
-                    part, ts_ms_col=ts_ms, tag=s.name, **opts
-                ).write.mode("overwrite").parquet(dest)
-                counts[s.name] = obs.get["n"]
-                continue
-            if s.fmt == "forward":
-                # out_forward payload staging: the tag frames the records
-                # (forward_format.c append_tag), so it leaves the body
-                from .msgpackfmt import write_forward
-
-                ts_col = s.ts_col or next(
-                    (c for c in part.columns if c in ("ts", "warc_ts", "time")),
-                    None,
-                )
-                cols = [c for c in part.columns if c not in (ts_col, tag_col)]
-                write_forward(
-                    part, ts_col, cols, dest, tag_col=tag_col,
-                    **(s.format_options or {}),
-                )
-                counts[s.name] = obs.get["n"]
-                continue
-            if s.fmt in ("slack", "nats"):
-                from . import vendorfmt
-
-                ts_col = s.ts_col or next(
-                    (c for c in part.columns if c in ("ts", "warc_ts", "time")),
-                    None,
-                )
-                fn = {"slack": vendorfmt.slack_payloads,
-                      "nats": vendorfmt.nats_payloads}[s.fmt]
-                fn(part, tag_col=tag_col, ts_col=ts_col,
-                   **(s.format_options or {})) \
-                    .write.mode("overwrite").parquet(dest)
-                counts[s.name] = obs.get["n"]
-                continue
-            if s.fmt == "plot":
-                # out_plot (plot.c): one value per line for `key` (or
-                # the record's FIRST column when unset) — gnuplot input
-                opts = s.format_options or {}
-                key = opts.get("key")
-                if key is None:
-                    key = next(c for c in part.columns
-                               if c not in (tag_col, s.ts_col))
-                part.select(
-                    F.col(f"`{key}`").cast("string").alias("value")
-                ).filter(F.col("value").isNotNull()) \
-                    .write.mode("overwrite").text(dest)
-                counts[s.name] = obs.get["n"]
-                continue
-            if s.fmt == "raw_lines":
-                # out_tcp/out_udp raw_message_key mode (tcp.c:70-117 /
-                # udp.c:88): one line per record — the record-accessor
-                # value rendered as a string + '\n'; records where the
-                # accessor finds nothing are SKIPPED (flb_ra_translate
-                # NULL -> continue)
-                from .accessor import compile_path, parse_path
-
-                key = (s.format_options or {})["key"]
-                parsed = parse_path(key)
-                if not parsed.is_tag and parsed.root not in part.columns:
-                    # key absent from every record: flb_ra_translate
-                    # returns NULL each time -> zero lines (a typed
-                    # frame resolves this at plan time). A constant-
-                    # false filter would fold the whole subtree — and
-                    # the Observation node with it — so count through
-                    # the observed plan and stage the empty dir apart.
-                    part.count()
-                    part.sparkSession.createDataFrame(
-                        [], "value string"
-                    ).write.mode("overwrite").text(dest)
-                else:
-                    part.select(
-                        compile_path(key, tag_col=tag_col)
-                        .cast("string").alias("value")
-                    ).filter(F.col("value").isNotNull()) \
-                        .write.mode("overwrite").text(dest)
-                counts[s.name] = obs.get["n"]
-                continue
-            if s.fmt == "td":
-                # out_td (td.c): the chunk's records as gzipped msgpack
-                from .msgpackfmt import to_msgpack_binary, _write_binary_values
-                import gzip as _gzip
-
-                ts_col = s.ts_col or next(
-                    (c for c in part.columns if c in ("ts", "warc_ts", "time")),
-                    None,
-                )
-                cols = [c for c in part.columns if c not in (ts_col, tag_col)]
-                packed = to_msgpack_binary(part, ts_col, cols)
-
-                def _gz(batches):
-                    import pandas as pd
-
-                    for pdf in batches:
-                        yield pd.DataFrame({
-                            "value": [_gzip.compress(
-                                b"".join(pdf["value"]), mtime=0)],
-                            "n": [len(pdf)],
-                        })
-
-                _write_binary_values(
-                    packed.mapInPandas(_gz, "value binary, n long"),
-                    dest, "msgpack.gz", count_col="n")
-                counts[s.name] = obs.get["n"]
-                continue
-            if s.fmt in ("logdna", "nrlogs", "azure", "skywalking",
-                         "kafka_rest", "vivo"):
-                # thin vendor staging: one request body per (tag, chunk)
-                from . import vendorfmt
-
-                ts_col = s.ts_col or next(
-                    (c for c in part.columns if c in ("ts", "warc_ts", "time")),
-                    None,
-                )
-                fn = {"logdna": vendorfmt.logdna_payloads,
-                      "nrlogs": vendorfmt.nrlogs_payloads,
-                      "azure": vendorfmt.azure_payloads,
-                      "skywalking": vendorfmt.skywalking_payloads,
-                      "kafka_rest": vendorfmt.kafka_rest_payloads,
-                      "vivo": vendorfmt.vivo_payloads}[s.fmt]
-                fn(part, tag_col=tag_col, ts_col=ts_col,
-                   **(s.format_options or {})) \
-                    .write.mode("overwrite").parquet(dest)
-                counts[s.name] = obs.get["n"]
-                continue
-            if s.fmt == "cloudwatch":
-                # out_cloudwatch_logs staging: PutLogEvents bodies per
-                # (group, stream) with the 10k/1MiB caps
-                from .cloudwatchfmt import cw_events, cw_payloads
-
-                ts_col = s.ts_col or next(
-                    (c for c in part.columns if c in ("ts", "warc_ts", "time")),
-                    None,
-                )
-                cw_payloads(
-                    cw_events(part, tag_col=tag_col, ts_col=ts_col,
-                              **(s.format_options or {}))
-                ).write.mode("overwrite").parquet(dest)
-                counts[s.name] = obs.get["n"]
-                continue
-            if s.fmt == "stackdriver":
-                # out_stackdriver staging: entries:write bodies per
-                # (tag, chunk), parquet table like the other vendors
-                from .stackdriverfmt import stackdriver_payloads
-
-                ts_col = s.ts_col or next(
-                    (c for c in part.columns if c in ("ts", "warc_ts", "time")),
-                    None,
-                )
-                stackdriver_payloads(
-                    part, tag_col=tag_col, ts_col=ts_col,
-                    **(s.format_options or {}),
-                ).write.mode("overwrite").parquet(dest)
-                counts[s.name] = obs.get["n"]
-                continue
-            if s.fmt == "datadog":
-                # out_datadog staging: one JSON-array request body per
-                # (tag, chunk), parquet table like the http staging
-                from .datadogfmt import datadog_payloads
-
-                ts_col = s.ts_col or next(
-                    (c for c in part.columns if c in ("ts", "warc_ts", "time")),
-                    None,
-                )
-                datadog_payloads(
-                    part, tag_col=tag_col, ts_col=ts_col,
-                    **(s.format_options or {}),
-                ).write.mode("overwrite").parquet(dest)
-                counts[s.name] = obs.get["n"]
-                continue
-            if s.fmt == "influx":
-                # out_influxdb staging: line-protocol text
-                # (influxdb_format); field-less records are skipped like
-                # the C's warn-and-continue (influxdb.c:274-279)
-                from .influxfmt import influx_lines
-
-                ts_col = s.ts_col or next(
-                    (c for c in part.columns if c in ("ts", "warc_ts", "time")),
-                    None,
-                )
-                line = influx_lines(
-                    part, tag_col=tag_col, ts_col=ts_col,
-                    **(s.format_options or {}),
-                )
-                part.select(line.alias("value")).filter(
-                    F.col("value").isNotNull()
-                ).write.mode("overwrite").text(dest)
-                counts[s.name] = obs.get["n"]
-                continue
-            if s.fmt == "syslog":
-                # out_syslog staging: RFC5424/RFC3164 lines, one per
-                # record (syslog.c syslog_format), written as text files
-                # a forwarder posts line-by-line
-                from .syslogfmt import syslog_line
-
-                ts_col = s.ts_col or next(
-                    (c for c in part.columns if c in ("ts", "warc_ts", "time")),
-                    None,
-                )
-                opts = dict(s.format_options or {})
-                opts.setdefault("ts_col", ts_col)
-                part.select(
-                    syslog_line(part, **opts).alias("value")
-                ).write.mode("overwrite").text(dest)
-                counts[s.name] = obs.get["n"]
-                continue
-            if s.fmt == "otlp":
-                # out_opentelemetry staging (opentelemetry_logs.c): the
-                # delivery stream renders as ExportLogsServiceRequest
-                # JSON envelopes, one per (tag, partition-chunk). A flat
-                # routed frame wraps each record as the kvlist body with
-                # the event time as timeUnixNano; grouped frames (from
-                # processors.otel_envelope / otlp ingest) keep their
-                # resource/scope sections via otlp.otlp_logs_payloads.
-                from .otlp import otlp_logs_payloads, otlp_metrics_payloads
-
-                if "metric_name" in part.columns:
-                    # a metrics-event-class frame renders as
-                    # ExportMetricsServiceRequest envelopes
-                    m_opts = {
-                        k: v for k, v in (s.format_options or {}).items()
-                        if k == "protobuf"
-                    }
-                    otlp_metrics_payloads(part, tag_col=tag_col, **m_opts) \
-                        .write.mode("overwrite").parquet(dest)
-                    counts[s.name] = obs.get["n"]
-                    continue
-                if "record_type" in part.columns:
-                    shaped = part
-                else:
-                    ts_col = s.ts_col or next(
-                        (c for c in part.columns
-                         if c in ("ts", "warc_ts", "time")),
-                        None,
-                    )
-                    rec_cols = [c for c in part.columns
-                                if c not in (ts_col, tag_col)]
-                    ts_expr = (
-                        F.col(ts_col).cast("timestamp").cast("double")
-                        if ts_col is not None else F.lit(None).cast("double")
-                    )
-                    shaped = part.select(
-                        F.col(tag_col).alias("tag"),
-                        F.lit("normal").alias("record_type"),
-                        F.lit(None).cast("string").alias("group_body"),
-                        ts_expr.alias("ts"),
-                        F.lit(None).cast("string").alias("otlp"),
-                        fb_json_body(part, rec_cols).alias("record"),
-                    )
-                otlp_logs_payloads(
-                    shaped, **(s.format_options or {})
-                ).write.mode("overwrite").parquet(dest)
-                counts[s.name] = obs.get["n"]
-                continue
-            if s.fmt == "http":
-                # out_http staging: one request-body row per (tag, chunk),
-                # written as a parquet table a poster iterates (body +
-                # content_type + content_encoding per request) — request
-                # boundaries survive, unlike a concatenated byte stream
-                ts_col = s.ts_col or next(
-                    (c for c in part.columns if c in ("ts", "warc_ts", "time")),
-                    None,
-                )
-                http_payloads(part, s, ts_col=ts_col, tag_col=tag_col) \
-                    .write.mode("overwrite").parquet(dest)
-                counts[s.name] = obs.get["n"]
-                continue
-            if s.fmt == "json":
-                # out_file json lines (flb_pack_msgpack_to_json_format):
-                # fb_json_body keeps nulls and escapes strings exactly like
-                # flb_utils_write_str; with json_date_format set the date
-                # key frames the record (json_line), else the bare record
-                ts_col = s.ts_col or next(
-                    (c for c in part.columns if c in ("ts", "warc_ts", "time")),
-                    None,
-                )
-                if s.json_date_format:
-                    line = json_line(part, s, ts_col)
-                else:
-                    line = fb_json_body(part, part.columns)
-                part = part.select(line.alias("value"))
-                writer = part.write.mode("overwrite")
+            ts_col = s.ts_col or next(
+                (c for c in part.columns if c in _TS_COLS), None
+            )
+            # the observe node upstream of each renderer still fires
+            out, method = _render(part, s, ts_col, dest)
+            if out is not None:
+                writer = out.write.mode(mode)
                 if s.max_records_per_file:
                     writer = writer.option(
                         "maxRecordsPerFile", s.max_records_per_file
                     )
-                writer.text(dest)
-                counts[s.name] = obs.get["n"]
-                continue
-            writer = part.write.mode("overwrite")
-            if s.max_records_per_file:
-                writer = writer.option("maxRecordsPerFile", s.max_records_per_file)
-            if s.fmt == "csv":
-                writer.option("header", True).option(
-                    "sep", _check_delimiter(s.delimiter) or ","
-                ).csv(dest)
-            else:
-                writer.parquet(dest)
+                if method == "csv":
+                    writer = writer.option("header", True).option(
+                        "sep", _check_delimiter(s.delimiter) or ","
+                    )
+                getattr(writer, method)(dest)
             counts[s.name] = obs.get["n"]
     finally:
-        flagged.unpersist()
+        if owned:
+            flagged.unpersist()
     return counts
+
+
+def _line(part: DataFrame, s: SinkSpec, ts_col) -> Column:
+    """One text line per record for the _LINE_FMTS renderers."""
+    opts = dict(s.format_options or {})
+    if s.fmt == "out_file":
+        return out_file_line(part, ts_col, _TAG_COL)
+    if s.fmt == "es_bulk":
+        return es_bulk_lines(part, ts_col, **(s.es_options or opts))
+    if s.fmt == "splunk_hec":
+        return splunk_hec_lines(part, ts_col, **opts)
+    if s.fmt == "loki":
+        return loki_lines(part, ts_col, **opts)
+    if s.fmt == "gelf":
+        from .gelffmt import gelf_line
+
+        return gelf_line(part, ts_col=ts_col, **(s.gelf_fields or {}))
+    if s.fmt == "syslog":
+        # out_syslog: RFC5424/RFC3164 lines (syslog.c syslog_format)
+        from .syslogfmt import syslog_line
+
+        opts.setdefault("ts_col", ts_col)
+        return syslog_line(part, **opts)
+    if s.fmt == "json":
+        # out_file json lines (flb_pack_msgpack_to_json_format):
+        # fb_json_body keeps nulls and escapes strings exactly like
+        # flb_utils_write_str; with json_date_format set the date key
+        # frames the record (json_line), else the bare record
+        if s.json_date_format:
+            return json_line(part, s, ts_col)
+        return fb_json_body(part, part.columns)
+    return _text_line(part, s)
+
+
+def _render(
+    part: DataFrame, s: SinkSpec, ts_col, dest: str
+) -> tuple[Optional[DataFrame], Optional[str]]:
+    """The frame one sink writes and the DataFrameWriter method that
+    writes it ('text', 'parquet' or 'csv'); (None, None) for the
+    SELF_NAMED_FMTS, which write ``dest`` themselves."""
+    opts = dict(s.format_options or {})
+    if s.fmt in _LINE_FMTS:
+        return part.select(_line(part, s, ts_col).alias("value")), "text"
+    if s.fmt in _PAYLOAD_FMTS:
+        from importlib import import_module
+
+        mod, fn = _PAYLOAD_FMTS[s.fmt]
+        render = getattr(import_module(f".{mod}", __package__), fn)
+        return render(part, tag_col=_TAG_COL, ts_col=ts_col, **opts), "parquet"
+    if s.fmt in ("influx", "plot", "raw_lines"):
+        # one line per record; records that render nothing are skipped
+        if s.fmt == "influx":
+            # out_influxdb line protocol (influxdb_format); field-less
+            # records skip like the C's warn-and-continue (influxdb.c:274-279)
+            from .influxfmt import influx_lines
+
+            line = influx_lines(part, tag_col=_TAG_COL, ts_col=ts_col, **opts)
+        elif s.fmt == "plot":
+            # out_plot (plot.c): one value per line for `key` (or the
+            # record's FIRST column when unset) — gnuplot input
+            key = opts.get("key")
+            if key is None:
+                key = next(
+                    c for c in part.columns if c not in (_TAG_COL, s.ts_col)
+                )
+            line = F.col(f"`{key}`").cast("string")
+        else:
+            # out_tcp/out_udp raw_message_key mode (tcp.c:70-117 /
+            # udp.c:88): the record-accessor value + '\n'; records where
+            # the accessor finds nothing are SKIPPED (flb_ra_translate
+            # NULL -> continue)
+            from .accessor import compile_path, parse_path
+
+            parsed = parse_path(opts["key"])
+            if not parsed.is_tag and parsed.root not in part.columns:
+                # key absent from every record: zero lines (a typed frame
+                # resolves this at plan time). A constant-false filter
+                # would fold the whole subtree — and the Observation node
+                # with it — so count through the observed plan and write
+                # an empty frame.
+                part.count()
+                empty = part.sparkSession.createDataFrame([], "value string")
+                return empty, "text"
+            line = compile_path(opts["key"], tag_col=_TAG_COL).cast("string")
+        out = part.select(line.alias("value"))
+        return out.filter(F.col("value").isNotNull()), "text"
+    if s.fmt == "prom":
+        # exposition text (metrics.prom_lines): banner-before-samples
+        # ordering must survive the file write, and an exposition page is
+        # one scrape document by definition — a single sorted partition,
+        # like the reference's one text buffer per scrape
+        # (hash_format_metrics)
+        from .metrics import prom_lines
+
+        page = prom_lines(part, **opts).repartition(1)
+        page = page.sortWithinPartitions("metric_name", "ord", "line")
+        return page.select(F.col("line").alias("value")), "text"
+    if s.fmt in ("kinesis", "firehose"):
+        # PutRecords / PutRecordBatch request bodies, one JSON body per
+        # line (Data is base64 so bodies are single-line by construction)
+        from . import kinesisfmt as kf
+
+        stream = opts.pop("stream")
+        common = dict(
+            tag_col=_TAG_COL, ts_col=ts_col,
+            time_key=opts.pop("time_key", None),
+            time_key_format=opts.pop("time_key_format", None),
+            log_key=opts.pop("log_key", None),
+        )
+        if s.fmt == "kinesis":
+            bodies = kf.kinesis_put_records(
+                kf.kinesis_data(part, **common), stream,
+                uuid=opts.pop("uuid", None))
+        else:
+            bodies = kf.firehose_put_record_batch(
+                kf.firehose_data(
+                    part, compression=opts.pop("compression", None), **common),
+                stream)
+        return bodies.select(F.col("body").alias("value")), "text"
+    if s.fmt == "promrw":
+        # out_prometheus_remote_write payload staging: one snappy/gzip
+        # WriteRequest body per (sink, chunk), written as parquet rows
+        # (tag, n_series, n_samples, body) for the poster
+        from .promrw import remote_write_payloads
+
+        rw_ts = opts.pop("ts_col", None) or s.ts_col
+        ts_ms = None
+        if rw_ts and rw_ts in part.columns:
+            if dict(part.dtypes)[rw_ts] in ("bigint", "int"):
+                ts_ms = rw_ts
+            else:
+                part = part.withColumn(
+                    "__ts_ms", F.unix_millis(F.col(rw_ts).cast("timestamp"))
+                )
+                ts_ms = "__ts_ms"
+        return remote_write_payloads(
+            part, ts_ms_col=ts_ms, tag=s.name, **opts
+        ), "parquet"
+    if s.fmt == "cloudwatch":
+        # out_cloudwatch_logs staging: PutLogEvents bodies per
+        # (group, stream) with the 10k/1MiB caps
+        from .cloudwatchfmt import cw_events, cw_payloads
+
+        return cw_payloads(
+            cw_events(part, tag_col=_TAG_COL, ts_col=ts_col, **opts)
+        ), "parquet"
+    if s.fmt == "otlp":
+        return _otlp_payloads(part, ts_col, opts), "parquet"
+    if s.fmt == "http":
+        # out_http staging: one request-body row per (tag, chunk), a
+        # parquet table a poster iterates (body + content_type +
+        # content_encoding per request) — request boundaries survive,
+        # unlike a concatenated byte stream
+        bodies = http_payloads(part, s, ts_col=ts_col, tag_col=_TAG_COL)
+        return bodies, "parquet"
+    if s.fmt in SELF_NAMED_FMTS:
+        _write_packed(part, s, ts_col, dest, opts)
+        return None, None
+    return part, ("csv" if s.fmt == "csv" else "parquet")
+
+
+def _otlp_payloads(part: DataFrame, ts_col, opts: dict) -> DataFrame:
+    """out_opentelemetry staging (opentelemetry_logs.c): the delivery
+    stream renders as ExportLogsServiceRequest JSON envelopes, one per
+    (tag, partition-chunk). A flat routed frame wraps each record as the
+    kvlist body with the event time as timeUnixNano; grouped frames (from
+    processors.otel_envelope / otlp ingest) keep their resource/scope
+    sections via otlp.otlp_logs_payloads."""
+    from .otlp import otlp_logs_payloads, otlp_metrics_payloads
+
+    if "metric_name" in part.columns:
+        # a metrics-event-class frame renders as
+        # ExportMetricsServiceRequest envelopes
+        m_opts = {k: v for k, v in opts.items() if k == "protobuf"}
+        return otlp_metrics_payloads(part, tag_col=_TAG_COL, **m_opts)
+    shaped = part
+    if "record_type" not in part.columns:
+        rec_cols = [c for c in part.columns if c not in (ts_col, _TAG_COL)]
+        ts_expr = (
+            F.col(ts_col).cast("timestamp").cast("double")
+            if ts_col is not None else F.lit(None).cast("double")
+        )
+        shaped = part.select(
+            F.col(_TAG_COL).alias("tag"),
+            F.lit("normal").alias("record_type"),
+            F.lit(None).cast("string").alias("group_body"),
+            ts_expr.alias("ts"),
+            F.lit(None).cast("string").alias("otlp"),
+            fb_json_body(part, rec_cols).alias("record"),
+        )
+    return otlp_logs_payloads(shaped, **opts)
+
+
+def _write_packed(
+    part: DataFrame, s: SinkSpec, ts_col, dest: str, opts: dict
+) -> None:
+    """The msgpack-family sinks, which name their own output files."""
+    from . import msgpackfmt
+
+    if s.fmt == "msgpack":
+        cols = [c for c in part.columns if c != ts_col]
+        msgpackfmt.write_msgpack(part, ts_col, cols, dest)
+        return
+    # out_forward / out_td: the tag frames the records
+    # (forward_format.c append_tag), so it leaves the body
+    cols = [c for c in part.columns if c not in (ts_col, _TAG_COL)]
+    if s.fmt == "forward":
+        msgpackfmt.write_forward(
+            part, ts_col, cols, dest, tag_col=_TAG_COL, **opts
+        )
+        return
+    # out_td (td.c): the chunk's records as gzipped msgpack
+    import gzip as _gzip
+
+    packed = msgpackfmt.to_msgpack_binary(part, ts_col, cols)
+
+    def _gz(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            yield pd.DataFrame({
+                "value": [_gzip.compress(b"".join(pdf["value"]), mtime=0)],
+                "n": [len(pdf)],
+            })
+
+    msgpackfmt._write_binary_values(
+        packed.mapInPandas(_gz, "value binary, n long"),
+        dest, "msgpack.gz", count_col="n")
 
 
 def kafka_frame(
@@ -901,7 +769,7 @@ def kafka_frame(
         from .msgpackfmt import to_msgpack_binary
 
         ts_col = spec.ts_col or next(
-            (c for c in df.columns if c in ("ts", "warc_ts", "time")), None
+            (c for c in df.columns if c in _TS_COLS), None
         )
         cols = [c for c in df.columns if c != ts_col]
         keyed = df.withColumn("topic", topic).withColumn("key", key)

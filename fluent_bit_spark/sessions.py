@@ -136,6 +136,21 @@ def sessionize_sql(
     """
 
 
+def ordered_rows(pdfs, by: list):
+    """Every Arrow chunk of one stateful-operator invocation as ONE pandas
+    frame, rows with a null in any ``by`` column dropped, sorted once by
+    ``by``. applyInPandasWithState hands a group over as
+    ``maxRecordsPerBatch``-row chunks in arbitrary shuffle order, so a
+    per-chunk sort folds a key out of order whenever it spans chunks."""
+    import pandas as pd
+
+    frames = list(pdfs)
+    if not frames:
+        return pd.DataFrame(columns=by)
+    pdf = pd.concat(frames, ignore_index=True).dropna(subset=by)
+    return pdf.sort_values(by, kind="stable", ignore_index=True)
+
+
 def sessionize_stream(
     events: DataFrame,
     key: str = "user_id",
@@ -152,7 +167,8 @@ def sessionize_stream(
     file-source end-of-stream flush in streaming exact dedup).
 
     Event-time semantics within the state: arrivals inside a batch are
-    processed in ts order; state carries (start_us, last_us, n) for the
+    processed in ts order (one sort across all Arrow chunks; null
+    timestamps dropped); state carries (start_us, last_us, n) for the
     single open session per key. Out-of-order arrivals ACROSS batches
     earlier than the open session's last event extend it (never reopen
     a closed one) — the no-watermark tradeoff, documented here rather
@@ -199,18 +215,18 @@ def sessionize_stream(
             last_us = 0
             n = 0
         closed = []
-        for pdf in pdfs:
-            us_sorted = pdf["__us"].astype("int64").sort_values()
-            for us in us_sorted:
-                us = int(us)
-                if start_us is None:
-                    start_us, last_us, n = us, us, 1
-                elif us - last_us >= gap_us:
-                    closed.append((start_us, last_us, n))
-                    start_us, last_us, n = us, us, 1
-                else:
-                    last_us = max(last_us, us)
-                    n += 1
+        for us in ordered_rows(pdfs, ["__us"])["__us"].astype("int64"):
+            us = int(us)
+            if start_us is None:
+                start_us, last_us, n = us, us, 1
+            elif us - last_us >= gap_us:
+                closed.append((start_us, last_us, n))
+                start_us, last_us, n = us, us, 1
+            else:
+                last_us = max(last_us, us)
+                n += 1
+        if start_us is None:
+            return  # every row of the batch had a null timestamp
         state.update((int(start_us), int(last_us), int(n)))
         state.setTimeoutDuration(idle_timeout_ms)
         if closed:

@@ -11,9 +11,11 @@ Mappings (SURVEY.md §2.1):
 * tumbling/hopping windows with late data -> event-time windows +
   watermark (an upgrade over the reference's processing-time timers,
   flb_sp.c:519-527 — documented divergence, SURVEY §2.5).
-* multi-sink routed writes -> foreachBatch: route_flags once per
-  micro-batch, one filtered write per sink — the same single-pass
-  fan-out as the batch pipeline (flb_engine_dispatch.c:247-354).
+* multi-sink routed writes -> foreachBatch: each micro-batch goes
+  through router.write_sinks in append mode, the same fan-out writer as
+  the batch pipeline (flb_engine_dispatch.c:247-354) — every sink
+  format, output processor and per-sink observe() count, with no second
+  scan of the batch.
 """
 
 from __future__ import annotations
@@ -27,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from .pipeline import enrich_stage, filter_stage, parse_stage, tag_stage
-from .router import SinkSpec, route_flags
+from .router import SinkSpec, check_appendable, write_sinks
 from .webgen import geo_dict, lang_dict
 
 PAGES_SCHEMA = (
@@ -78,9 +80,12 @@ def run_pipeline_stream(
     engine: str = "jvm",
 ) -> StreamingQuery:
     """The batch pipeline's stages applied to a stream, fanned out to
-    per-sink parquet dirs inside foreachBatch. Restarting with the same
-    checkpoint_dir resumes from the recorded file offsets (in_tail's
-    offset db semantics) — already-processed input is never re-routed.
+    per-sink dirs by router.write_sinks inside foreachBatch (append mode:
+    sinks in router.SELF_NAMED_FMTS are rejected before the query
+    starts, since each micro-batch would replace the last). Restarting
+    with the same checkpoint_dir resumes from the recorded file offsets
+    (in_tail's offset db semantics) — already-processed input is never
+    re-routed.
 
     engine='fused' runs the north-rule shape on the stream: html->text
     extraction + parse in one Arrow crossing (mapInArrow is supported
@@ -99,20 +104,12 @@ def run_pipeline_stream(
     parsed = tag_stage(enrich_stage(filter_stage(stage_out), geo, langs))
 
     sink_list = list(sinks)
-    route_cols = [f"__route_{s.name}" for s in sink_list]
+    # rejected before start(): raised inside foreachBatch, the same error
+    # would only surface later as a failed query
+    check_appendable(sink_list)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        flagged = route_flags(batch_df, sink_list).persist()
-        try:
-            for s in sink_list:
-                # backticks: dot-carrying sink names must not parse as
-                # nested paths (same fix as router.write_sinks)
-                part = flagged.filter(
-                    F.col(f"`__route_{s.name}`")
-                ).drop(*route_cols)
-                part.write.mode("append").parquet(os.path.join(out_dir, s.name))
-        finally:
-            flagged.unpersist()
+        write_sinks(batch_df, sink_list, out_dir, mode="append")
 
     writer = (
         parsed.writeStream.foreachBatch(write_batch)
@@ -154,10 +151,12 @@ def throttle_stream(
     path for semantics Spark's built-ins can't express (the batch
     apply_throttle ranks within a pane; this one carries pane counters
     between triggers like the reference's ticker-advanced window,
-    plugins/filter_throttle/throttle.c:82-125).
+    plugins/filter_throttle/throttle.c:82-125). Records with a null
+    timestamp belong to no pane and are dropped.
     """
-    import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    from .sessions import ordered_rows
 
     # pass the StructType directly: string-munging simpleString() breaks
     # on nested struct/array-of-struct columns
@@ -169,22 +168,20 @@ def throttle_stream(
             cur_pane, used = state.get
         else:
             cur_pane, used = -1, 0
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col)
-            panes = (pdf[ts_col].astype("int64") // 1_000_000_000) // interval_sec
-            keep_rows = []
-            for i, pane in enumerate(panes):
-                if pane != cur_pane:
-                    cur_pane, used = int(pane), 0
-                if used < rate:
-                    used += 1
-                    keep_rows.append(i)
-            if keep_rows:
-                out.append(pdf.iloc[keep_rows])
+        # one sort across every Arrow chunk: a later chunk holding an
+        # earlier pane must not reset the pane counter
+        pdf = ordered_rows(pdfs, [ts_col])
+        panes = (pdf[ts_col].astype("int64") // 1_000_000_000) // interval_sec
+        keep_rows = []
+        for i, pane in enumerate(panes):
+            if pane != cur_pane:
+                cur_pane, used = int(pane), 0
+            if used < rate:
+                used += 1
+                keep_rows.append(i)
         state.update((int(cur_pane), int(used)))
-        if out:
-            yield pd.concat(out)
+        if keep_rows:
+            yield pdf.iloc[keep_rows]
 
     return (
         pages.groupBy(F.col(key_col))

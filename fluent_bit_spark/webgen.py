@@ -158,9 +158,13 @@ _LANG_CACHE: dict = {}
 
 
 def lang_dict(spark: SparkSession) -> DataFrame:
-    cached = _LANG_CACHE.get(id(spark))
+    # applicationId, not id(spark): CPython reuses freed addresses, so a
+    # session built after stop() could get a frame of the stopped one
+    key = spark.sparkContext.applicationId
+    cached = _LANG_CACHE.get(key)
     if cached is not None:
         return cached
+    _LANG_CACHE.clear()
     rows = [
         ("en", "English", "germanic"),
         ("es", "Spanish", "romance"),
@@ -173,5 +177,5 @@ def lang_dict(spark: SparkSession) -> DataFrame:
     df = SparkSession.getActiveSession().createDataFrame(
         rows, "lang string, lang_name string, family string"
     )
-    _LANG_CACHE[id(spark)] = df
+    _LANG_CACHE[key] = df
     return df
